@@ -4597,7 +4597,8 @@ object SparkEntry {
           enrich(docs.filter(col("doc_id") % 6 === k)), k.toLong,
           s"$work/state", bands = 16, rowsPerBand = 2, thresholdPct = 70,
           autoCompactMinLive = 2)
-      require(graft.streaming.Incremental.highwater(s"$work/state") >= 0L,
+      require(graft.streaming.StateStore.readMarker(s"$work/state",
+        graft.streaming.StateStore.HighWater) >= 0L,
         "auto-compaction must have fired at least once in a 6-batch run")
       OracleAux.q321Pairs = Some(graft.streaming.Incremental
         .ndPairs(s, s"$work/state").select("e_id", "d_id").collect()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Registry
+import graft.streaming.StateStore
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -449,17 +450,16 @@ object Similarity {
   def applyIvfIndexBatch(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, batchId: Long, stateDir: String, idCol: String,
       vecCol: String, nlist: Int, lloydIters: Int = 2): Unit =
-    graft.streaming.Incremental.withLease(stateDir) {
+    StateStore.withLease(stateDir) {
     // a batch at or below the compaction high-water mark was re-assigned
     // into the refreshed index — a late replay must be a no-op (it would
     // overwrite (cid, batch) partitions with STALE-centroid assignments)
-    if (batchId <= graft.streaming.Incremental.highwater(stateDir)) return
-    graft.streaming.Incremental.pinLayout(stateDir,
-      s"nlist=$nlist,lloydIters=$lloydIters")
+    if (batchId <= StateStore.readMarker(stateDir, StateStore.HighWater)) return
+    StateStore.pinLayout(stateDir, s"nlist=$nlist,lloydIters=$lloydIters")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val centDir = s"$stateDir/centroids"
     val cents: Array[Array[Double]] =
-      graft.streaming.Incremental.parquetIfAny(spark, centDir) match {
+      StateStore.parquetIfAny(spark, centDir) match {
         case Some(df) => df.orderBy("cid").collect()
           .map(_.getSeq[Double](1).toArray)
         case None =>
@@ -518,13 +518,8 @@ object Similarity {
     // pinLayout) — only READS fall back; production-correct behavior for
     // a serving index whose refresh died: stale answers until the reshard
     // re-runs, never wrong ones.
-    val pending =
-      graft.streaming.Incremental.reshardMarkerFile(stateDir).exists()
     def surfacePath(name: String): String =
-      if (pending && graft.streaming.Incremental
-          .parquetIfAny(spark, s"$stateDir/_$name.old").isDefined)
-        s"$stateDir/_$name.old"
-      else s"$stateDir/$name"
+      StateStore.servingPath(stateDir, s"$stateDir/$name")
     val cents = spark.read.parquet(surfacePath("centroids")).orderBy("cid")
       .collect().map(_.getSeq[Double](1).toArray)
     val qProbed = queries.select(col(idCol).as("query_id"),
@@ -552,7 +547,7 @@ object Similarity {
     * recall decays and nlist cannot grow. This retrains centroids from a
     * deterministic sample of the accumulated postings, re-assigns EVERY
     * posting, and promotes both surfaces under the retire-rename pattern
-    * ([[graft.streaming.Incremental]]'s foldBatches contract: the old dir
+    * ([[graft.streaming.StateStore.foldBatches]]'s contract: the old dir
     * is renamed to `_<name>.old`, never deleted before the new dir is in
     * place, and a stale retiree is only dropped when the primary exists).
     * Crash anywhere → re-running the same call converges: the retrain
@@ -568,7 +563,7 @@ object Similarity {
     */
   def compactIvf(spark: org.apache.spark.sql.SparkSession, stateDir: String,
       upToBatch: Long, newNlist: Int = -1, sampleCap: Int = 200000): Unit =
-    graft.streaming.Incremental.withLease(stateDir) {
+    StateStore.withLease(stateDir) {
     // the whole refresh runs under the _reshard_pending marker: centroids
     // and posts swap as two surfaces, so any crash between tmp-write and
     // the final pin leaves them potentially inconsistent — the marker
@@ -582,22 +577,16 @@ object Similarity {
     // refresh first drops stale retirees (left by a crash between a
     // completed refresh's marker clear and its retiree cleanup) so the
     // ones it retires are exactly the pre-THIS-refresh generation.
-    val resuming =
-      graft.streaming.Incremental.reshardMarkerFile(stateDir).exists()
-    graft.streaming.Incremental.withReshardMarker(stateDir) {
-    import graft.streaming.Incremental.parquetIfAny
+    val resuming = StateStore.reshardPending(stateDir)
+    StateStore.withReshardMarker(stateDir) {
+    import StateStore.parquetIfAny
     if (!resuming)
-      for (n <- Seq("centroids", "posts")) {
-        val old = new java.io.File(stateDir, s"_$n.old")
+      for (n <- Seq("centroids", "posts"))
         // only when the primary holds data: a retiree WITHOUT a primary is
         // not stale — it IS the data (crash between a swap's two renames)
-        if (old.exists() &&
-            parquetIfAny(spark, s"$stateDir/$n").isDefined)
-          graft.streaming.Incremental.deleteRec(old)
-      }
-    def rdOr(name: String) = parquetIfAny(spark, s"$stateDir/$name")
-      .orElse(parquetIfAny(spark, s"$stateDir/_$name.old"))
-    val posts = rdOr("posts").getOrElse(
+        if (parquetIfAny(spark, s"$stateDir/$n").isDefined)
+          StateStore.deleteRec(s"$stateDir/_$n.old")
+    val posts = StateStore.primaryOrRetiree(spark, s"$stateDir/posts").getOrElse(
       throw new IllegalArgumentException(s"no IVF state under $stateDir"))
     // re-assignment is global, so every live batch must fold
     val liveBatches = posts.select("batch").distinct()
@@ -606,12 +595,10 @@ object Similarity {
       s"centroid refresh re-assigns ALL postings: found batches " +
         s"${liveBatches.filter(_ > upToBatch).sorted.mkString(",")} above " +
         s"upToBatch=$upToBatch")
-    val lf = new java.io.File(stateDir, "_layout")
-    val stored = new String(java.nio.file.Files.readAllBytes(lf.toPath)).trim
-    val oldNlist = "nlist=(\\d+)".r.findFirstMatchIn(stored).get.group(1).toInt
-    val lloydIters =
-      "lloydIters=(\\d+)".r.findFirstMatchIn(stored).get.group(1).toInt
-    val nlist = if (newNlist > 0) newNlist else oldNlist
+    val lloydIters = StateStore.layoutParam(stateDir, "lloydIters").toInt
+    val nlist =
+      if (newNlist > 0) newNlist
+      else StateStore.layoutParam(stateDir, "nlist").toInt
     val vecs = posts.select("vec_id", "v", "nrm", "batch").persist()
     vecs.count() // materialize before retiring the dir it was read from
     val cents = trainCentroids(vecs, "vec_id", "v", nlist, lloydIters,
@@ -629,21 +616,17 @@ object Similarity {
     // discipline); a crash between the two is repaired by re-running. The
     // retirees survive the swap — queryIvfIndex serves them while the
     // marker is up — and are dropped only after the marker clears below.
-    graft.streaming.Incremental.swapKeepRetiree(stateDir, "centroids")
-    graft.streaming.Incremental.swapKeepRetiree(stateDir, "posts")
-    if (newNlist > 0) java.nio.file.Files.writeString(lf.toPath,
-      stored.replaceAll("nlist=\\d+", s"nlist=$newNlist"))
-    java.nio.file.Files.writeString(
-      new java.io.File(stateDir, "_highwater").toPath, upToBatch.toString)
+    StateStore.swapKeepRetiree(stateDir, "centroids")
+    StateStore.swapKeepRetiree(stateDir, "posts")
+    if (newNlist > 0) StateStore.updateLayout(stateDir, "nlist", newNlist)
+    StateStore.writeMarker(stateDir, StateStore.HighWater, upToBatch)
     }
     // marker is cleared: readers have cut over to the refreshed primaries,
     // so the pre-refresh snapshot can go. A crash before these deletes
     // leaves stale retirees with NO marker — readers ignore them (no
     // marker → primaries) and the next refresh drops them on entry.
-    for (n <- Seq("centroids", "posts")) {
-      val old = new java.io.File(stateDir, s"_$n.old")
-      if (old.exists()) graft.streaming.Incremental.deleteRec(old)
-    }
+    for (n <- Seq("centroids", "posts"))
+      StateStore.deleteRec(s"$stateDir/_$n.old")
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.StateStore
 
 /** Scaling probe for the LSH dedup / ANN paths: synthesizes corpora several
   * times larger than the sf0.1 testdata and measures wall time and candidate
@@ -1058,21 +1059,8 @@ object ScaleProbe {
     if (want("auto_compact")) {
       val n = 24000
       val bCount = 24
-      def liveBatchDirs(dir: String): Int = {
-        def rec(f: java.io.File): Set[String] =
-          if (!f.isDirectory) Set.empty
-          else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-            .flatMap(d => if (d.getName.startsWith("batch=")) Set(d.getName)
-                          else rec(d)).toSet
-        rec(new java.io.File(dir)).size
-      }
-      def parquetFiles(dir: String): Int = {
-        def rec(f: java.io.File): Int =
-          if (f.isFile) (if (f.getName.endsWith(".parquet")) 1 else 0)
-          else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-            .map(rec).sum
-        rec(new java.io.File(dir))
-      }
+      def liveBatchDirs(dir: String): Int =
+        StateStore.batchDirs(dir).map(_._1).distinct.size
       def med(xs: Seq[Double]): Double = {
         val s = xs.sorted; s(s.size / 2)
       }
@@ -1116,7 +1104,7 @@ object ScaleProbe {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         gate("neardup", wallsOn, liveBatchDirs(s"$stOn/idx"),
           dec(stOn) == dec(stOff),
-          graft.streaming.Incremental.highwater(stOn) >= 0L)
+          StateStore.readMarker(stOn, StateStore.HighWater) >= 0L)
       }
       // embedding near-dup: same differential
       locally {
@@ -1143,7 +1131,7 @@ object ScaleProbe {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         gate("embdup", wallsOn, liveBatchDirs(s"$stOn/idx"),
           dec(stOn) == dec(stOff),
-          graft.streaming.Incremental.highwater(stOn) >= 0L)
+          StateStore.readMarker(stOn, StateStore.HighWater) >= 0L)
         emb.unpersist(blocking = false)
       }
       // decontamination tg: same differential
@@ -1170,7 +1158,7 @@ object ScaleProbe {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         gate("contam", wallsOn, liveBatchDirs(s"$stOn/tg"),
           ver(stOn) == ver(stOff),
-          graft.streaming.Incremental.highwater(stOn) >= 0L)
+          StateStore.readMarker(stOn, StateStore.HighWater) >= 0L)
         src.unpersist(blocking = false)
       }
       // spans: whole-shard-rewrite surfaces — per-batch partitions never
@@ -1185,7 +1173,7 @@ object ScaleProbe {
               .select("doc_id", "source", "text"),
             k.toLong, s"$work/state", n = 15))._2
         }
-        val files = parquetFiles(s"$work/state")
+        val files = StateStore.dataFiles(s"$work/state").size
         val liveAfter = liveBatchDirs(s"$work/state")
         // 16 gshards + 16 dshards, ≤ a few files each after 24 rewrites
         gate("spans", walls.map(_.toDouble), liveAfter,
@@ -1217,13 +1205,9 @@ object ScaleProbe {
             (col("id") * 2 + lo).as("a"), (col("id") * 2 + lo + 1).as("b"))
           val (_, t) = time(graft.streaming.Incremental.applyCcBatch(
             spark, ed, k.toLong, s"$work/state", fwdFoldMin = trigger))
-          val fwdDir = new java.io.File(s"$work/state/fwd")
-          val latest = Option(fwdDir.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith("batch="))
-            .map(_.getName.stripPrefix("batch=").toLong)
-          if (latest.nonEmpty)
-            maxFwd = math.max(maxFwd, spark.read
-              .parquet(s"$work/state/fwd/batch=${latest.max}").count())
+          StateStore.batchDirs(s"$work/state/fwd").maxByOption(_._1)
+            .foreach(d => maxFwd =
+              math.max(maxFwd, spark.read.parquet(d._2).count()))
           t
         }
         val head3 = walls.take(3).sum / 3

@@ -275,7 +275,7 @@ class FunctionsSpec extends SparkSuite {
       assert(filtered.count() == 244L * 4)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      graft.streaming.Incremental.deleteRec(new java.io.File(dir))
+      graft.streaming.StateStore.deleteRec(dir)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Events
+import graft.streaming.{Events, StateStore}
 
 /** Structured Streaming equivalence: the streaming tumbling-window aggregation
   * over the static events dir must equal the batch form (Structured
@@ -1349,7 +1349,7 @@ class StreamingSpec extends SparkSuite {
     assert(batchCands.count() == 0L, "batch path should cap the bucket")
     val s1 = s"$work/s1"
     apply(s1, 0L to 11L, 0L, cap = 8)
-    assert(Incremental.parquetIfAny(spark, s"$s1/pairs")
+    assert(StateStore.parquetIfAny(spark, s"$s1/pairs")
       .map(_.count()).getOrElse(0L) == 0L)
     assert(kept(s1).values.forall(_ == 1L), "capped bucket must match nothing")
     // ...and with the cap ABOVE the population both paths pair them up
@@ -1482,14 +1482,14 @@ class StreamingSpec extends SparkSuite {
     val held = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val holder = new Thread(() =>
-      Incremental.withLease(state) { held.countDown(); release.await() })
+      StateStore.withLease(state) { held.countDown(); release.await() })
     holder.start(); held.await()
     val e2 = intercept[IllegalStateException] { applyOne(1L) }
     assert(e2.getMessage.contains("single-writer"))
     release.countDown(); holder.join()
     // (3) an exception inside the body still releases both layers
     intercept[RuntimeException] {
-      Incremental.withLease(state) { throw new RuntimeException("boom") }
+      StateStore.withLease(state) { throw new RuntimeException("boom") }
     }
     applyOne(1L) // lease is free again
     assert(Incremental.cdcTable(spark, state, "k").count() == 1L)
@@ -1560,7 +1560,7 @@ class StreamingSpec extends SparkSuite {
     // the pending marker up. A reader on the primaries would probe the
     // wrong lists; the retiree fallback must keep it on the pre-refresh
     // pair.
-    val marker = graft.streaming.Incremental.reshardMarkerFile(state)
+    val marker = StateStore.reshardMarkerFile(state)
     java.nio.file.Files.writeString(marker.toPath, "pending")
     val cdir = new java.io.File(state, "centroids")
     assert(cdir.renameTo(new java.io.File(state, "_centroids.old")))
@@ -1866,7 +1866,7 @@ class StreamingSpec extends SparkSuite {
     def cdcRows() = Incremental.cdcTable(spark, cdc, "k").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val before = cdcRows()
-    val marker = Incremental.reshardMarkerFile(cdc)
+    val marker = StateStore.reshardMarkerFile(cdc)
     java.nio.file.Files.writeString(marker.toPath, "pending")
     assert(new java.io.File(cdc)
       .renameTo(new java.io.File(s"$work/_cdc.old")), "test setup")
@@ -1894,7 +1894,7 @@ class StreamingSpec extends SparkSuite {
     def labels() = Incremental.ccLabels(spark, cc).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val lBefore = labels()
-    val ccMarker = Incremental.reshardMarkerFile(cc)
+    val ccMarker = StateStore.reshardMarkerFile(cc)
     java.nio.file.Files.writeString(ccMarker.toPath, "pending")
     assert(new java.io.File(s"$cc/lbl")
       .renameTo(new java.io.File(s"$cc/_lbl.old")), "test setup")
@@ -1966,7 +1966,7 @@ class StreamingSpec extends SparkSuite {
     assert(!new java.io.File(s"$work/_delta.old").exists()) // clean swap
     // a fold crashed between its two renames: marker up, data only in the
     // retiree; the report must keep answering, appends must not corrupt
-    val marker = Incremental.reshardMarkerFile(dl)
+    val marker = StateStore.reshardMarkerFile(dl)
     java.nio.file.Files.writeString(marker.toPath, "pending")
     assert(new java.io.File(dl)
       .renameTo(new java.io.File(s"$work/_delta.old")), "test setup")
